@@ -7,13 +7,22 @@ spatial.py:195-224``: STRtree bulk query). Our distributed plan:
 1. **Cover** (driver/broadcast side): each polygon → covering cells at a
    pruning zoom, split into *interior* cells (fully inside — candidate rows
    need NO exact test) and *boundary* cells (need ray-cast refinement).
+   The cells ship run-length encoded: one row per maximal stretch of
+   consecutive cells in one cell row with one boundary flag, split at
+   ``2**b``-cell blocks (``b = min(5, zoom)``) and keyed by the block
+   ``_rkey``. At zoom 11 ten hexagons cover ~10^5 cells but only ~7.5·10^3
+   runs — the raster∩vector "intersection file" of *Raptor* (VLDB 2019).
    Polygon sets are small (zones/dims); the cover runs in numpy and ships as
    a broadcast equi-join side. [At 10^12 docs the polygon side stays ≪ the
    doc side, so broadcast-hash-join avoids shuffling the big table at all.]
-2. **Encode** (distributed, JVM-side): each point row gets ``cell_id`` via
-   pure column arithmetic — no UDF, stays in whole-stage codegen.
-3. **Join**: ``points ⋈ broadcast(zone_cells) ON cell_id`` — Catalyst emits a
-   BroadcastHashJoin; the 10^12-row side is never shuffled.
+2. **Encode** (distributed, JVM-side): each point row gets its cell column
+   ``_cx`` and block key ``_rkey`` via pure column arithmetic — no UDF,
+   stays in whole-stage codegen.
+3. **Join**: ``points ⋈ broadcast(runs) ON _rkey`` — Catalyst emits a
+   BroadcastHashJoin; the 10^12-row side is never shuffled. The run test
+   ``_cx BETWEEN _lo AND _hi`` and, for convex zones, the half-plane
+   refine of boundary runs are ONE ``F.expr`` string that lands in the
+   join condition.
 4. **Refine**: boundary-cell candidates run a vectorized numpy ray-cast
    (``cells.points_in_polygon``) inside an Arrow-batched pandas UDF, grouped
    by zone inside each batch (no per-row Python).
@@ -33,59 +42,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import cells
-
-
-from collections import OrderedDict
-
-_COVER_CACHE: OrderedDict = OrderedDict()
-_COVER_CACHE_MAX = 32  # LRU bound: long-lived sessions must not accumulate
-
-
-def _zones_key(zones: list[dict], zoom: int, mode: str) -> tuple:
-    import hashlib
-
-    h = hashlib.sha1()
-    for z in zones:
-        h.update(str(z["zone_id"]).encode())
-        for p in z["parts"]:
-            h.update(np.ascontiguousarray(p, dtype=np.float64).tobytes())
-    return (zoom, mode, h.hexdigest())
-
-
-def zone_cover_cached(zones: list[dict], zoom: int, mode: str = "center") -> pd.DataFrame:
-    """Plan-once/apply-many (reference ``Reprojector`` discipline,
-    ``reproject.py:35-213``): the driver-side cover of a zone set is pure —
-    cache it so repeated joins against the same zones skip the numpy pass."""
-    k = _zones_key(zones, zoom, mode)
-    if k in _COVER_CACHE:
-        _COVER_CACHE.move_to_end(k)
-    else:
-        _COVER_CACHE[k] = zone_cover(zones, zoom, mode)
-        while len(_COVER_CACHE) > _COVER_CACHE_MAX:
-            _COVER_CACHE.popitem(last=False)
-    return _COVER_CACHE[k]
-
-
-_COVER_SDF_CACHE: OrderedDict = OrderedDict()
-
-
-def zone_cover_sdf_cached(spark, zones: list[dict], zoom: int, mode: str) -> DataFrame:
-    """Spark-side twin of the cover cache: a zoom-11 cover of 10 zones is
-    ~10^5 rows, and re-shipping it driver→JVM (createDataFrame) on every
-    join cost ~150 ms per query build. The LocalRelation is immutable, so
-    caching it per (zones, zoom, mode, application) is pure plan reuse —
-    the Iceberg-production analogue is a persisted index side table."""
-    k = (_zones_key(zones, zoom, mode), spark.sparkContext.applicationId)
-    if k in _COVER_SDF_CACHE:
-        _COVER_SDF_CACHE.move_to_end(k)
-    else:
-        cover = zone_cover_cached(zones, zoom, mode)
-        _COVER_SDF_CACHE[k] = spark.createDataFrame(
-            cover, schema="zone_id long, cell_id long, boundary boolean"
-        )
-        while len(_COVER_SDF_CACHE) > _COVER_CACHE_MAX:
-            _COVER_SDF_CACHE.popitem(last=False)
-    return _COVER_SDF_CACHE[k]
 
 
 def _part_cover_np(poly: np.ndarray, zoom: int, mode: str) -> tuple[np.ndarray, np.ndarray]:
@@ -141,6 +97,37 @@ def zone_cover(zones: list[dict], zoom: int, mode: str = "center") -> pd.DataFra
     return df.sort_values(["zone_id", "cell_id"]).drop_duplicates(["zone_id", "cell_id"]).reset_index(drop=True)
 
 
+_RUN_BLOCK_BITS = 5  # runs never cross a 32-cell block of a cell row
+
+
+def zone_runs(zones: list[dict], zoom: int) -> pd.DataFrame:
+    """Run-length form of ``zone_cover(zones, zoom, "intersects")``:
+    ``(zone_id, _rkey, _lo, _hi, _bnd)``, one row per maximal stretch of
+    cells ``_lo..._hi`` (column index ``cx``) of one cell row that share
+    the boundary flag ``_bnd`` and one ``2**b``-cell block,
+    ``_rkey = (cy << (zoom - b)) + (cx >> b)`` with ``b = min(5, zoom)``.
+    The block split bounds how many runs share a join key, so the hash
+    side stays an equi-join and ``BETWEEN`` only picks among a few rows.
+    Expanding the runs gives back the cover cell for cell."""
+    cov = zone_cover(zones, zoom, "intersects")
+    zid = cov["zone_id"].to_numpy(np.int64)
+    bnd = cov["boundary"].to_numpy(bool)
+    cx, cy = cells.unpack(cov["cell_id"].to_numpy(np.int64), zoom)
+    b = min(_RUN_BLOCK_BITS, zoom)
+    rkey = (cy << (zoom - b)) + (cx >> b)
+    o = np.lexsort((cx, rkey, zid))
+    zid, rkey, cx, bnd = zid[o], rkey[o], cx[o], bnd[o]
+    start = np.ones(len(cx), dtype=bool)
+    start[1:] = (
+        (zid[1:] != zid[:-1]) | (rkey[1:] != rkey[:-1])
+        | (cx[1:] != cx[:-1] + 1) | (bnd[1:] != bnd[:-1])
+    )
+    end = np.ones(len(cx), dtype=bool)
+    end[:-1] = start[1:]
+    return pd.DataFrame({"zone_id": zid[start], "_rkey": rkey[start],
+                         "_lo": cx[start], "_hi": cx[end], "_bnd": bnd[start]})
+
+
 def with_cell_id(points: DataFrame, zoom: int, x: str = "x", y: str = "y") -> DataFrame:
     cx, cy = cells.geo_cell_col(F.col(x), F.col(y), zoom)
     return points.withColumn("cell_id", cells.cell_id_col(cx, cy, zoom))
@@ -159,7 +146,7 @@ def _all_convex_ccw(zones: list[dict]) -> bool:
     return True
 
 
-def _convex_refine_expr(zones: list[dict], x: str, y: str) -> F.Column:
+def _convex_refine_sql(zones: list[dict], x: str, y: str) -> str:
     """Strict-interior test for ccw-convex zones as pure column algebra —
     the 'prepared geometry' JVM fast path: whole-stage codegen, no Python
     workers in the hot loop. Equals the ray-cast off-boundary.
@@ -187,7 +174,7 @@ def _convex_refine_expr(zones: list[dict], x: str, y: str) -> F.Column:
                 )
             parts_sql.append("(" + " AND ".join(conds) + ")")
         branches.append(f"WHEN {int(z['zone_id'])} THEN ({' OR '.join(parts_sql)})")
-    return F.expr(f"CASE zone_id {' '.join(branches)} ELSE false END")
+    return f"CASE zone_id {' '.join(branches)} ELSE false END"
 
 
 _MAX_EDGE_COLS = 16
@@ -232,17 +219,6 @@ def _zone_edges_pdf(zones: list[dict]) -> "pd.DataFrame | None":
     return pd.DataFrame(rows, columns=cols)
 
 
-def _edge_refine_cond(n_edges: int, x: str, y: str) -> F.Column:
-    cond = None
-    for k in range(n_edges):
-        c = (
-            F.col(f"e{k}_dx") * (F.col(y) - F.col(f"e{k}_ya"))
-            - F.col(f"e{k}_dy") * (F.col(x) - F.col(f"e{k}_xa"))
-        ) > 0
-        cond = c if cond is None else (cond & c)
-    return cond
-
-
 def pip_join(
     points: DataFrame,
     zones: list[dict],
@@ -259,38 +235,36 @@ def pip_join(
     codegen, no Python; single-part zones carry their edge coefficients as
     broadcast-side DATA columns, multi-part zones fall back to a CASE
     expression); 'udf' — vectorized numpy ray-cast (any polygon); 'auto' —
-    expr when all zones are convex ccw, else udf.
+    expr when all zones are convex ccw, else udf. Every mode joins the same
+    broadcast run table (:func:`zone_runs`) and builds no Spark job.
     """
     spark = points.sparkSession
-    pts = with_cell_id(points, zoom, x, y)
-
     if refine == "auto":
         refine = "expr" if _all_convex_ccw(zones) else "udf"
-    if refine == "expr":
-        edges = _zone_edges_pdf(zones)
-        if edges is not None:
-            k = _zones_key(zones, zoom, "intersects+edges")
-            key = (k, spark.sparkContext.applicationId)
-            if key in _COVER_SDF_CACHE:
-                _COVER_SDF_CACHE.move_to_end(key)
-            else:
-                cov = zone_cover_cached(zones, zoom, "intersects").merge(edges, on="zone_id")
-                _COVER_SDF_CACHE[key] = spark.createDataFrame(cov)
-                while len(_COVER_SDF_CACHE) > _COVER_CACHE_MAX:
-                    _COVER_SDF_CACHE.popitem(last=False)
-            cover_edges = F.broadcast(_COVER_SDF_CACHE[key])
-            n_edges = sum(1 for c in cover_edges.columns if c.endswith("_dx"))
-            cand = pts.join(cover_edges, "cell_id")
-            keep = ~F.col("boundary") | _edge_refine_cond(n_edges, x, y)
-            drop = ["boundary", "cell_id"] + [c for c in cover_edges.columns if c.startswith("e")]
-            return cand.where(keep).drop(*drop)
-        cover_df = F.broadcast(zone_cover_sdf_cached(spark, zones, zoom, "intersects"))
-        cand = pts.join(cover_df, "cell_id")
-        keep = ~F.col("boundary") | _convex_refine_expr(zones, x, y)
-        return cand.where(keep).drop("boundary", "cell_id")
+    runs = zone_runs(zones, zoom)
+    edges = _zone_edges_pdf(zones) if refine == "expr" else None
+    if edges is not None:
+        runs = runs.merge(edges, on="zone_id")
+    schema = "zone_id long, _rkey long, _lo long, _hi long, _bnd boolean" + "".join(
+        f", {c} double" for c in runs.columns[5:]
+    )
+    bits = min(_RUN_BLOCK_BITS, zoom)
+    cx, cy = cells.geo_cell_col(F.col(x), F.col(y), zoom)
+    cand = points.withColumns(
+        {"_cx": cx, "_rkey": F.shiftleft(cy, zoom - bits) + F.shiftright(cx, bits)}
+    ).join(F.broadcast(spark.createDataFrame(runs, schema=schema)), "_rkey")
+    aux = ["_cx"] + [c for c in runs.columns if c != "zone_id"]
+    in_run = "_cx BETWEEN _lo AND _hi"
 
-    cover_df = F.broadcast(zone_cover_sdf_cached(spark, zones, zoom, "intersects"))
-    cand = pts.join(cover_df, "cell_id")
+    if refine == "expr":
+        if edges is not None:
+            inside = " AND ".join(
+                f"e{k}_dx * (`{y}` - e{k}_ya) - e{k}_dy * (`{x}` - e{k}_xa) > 0"
+                for k in range((len(edges.columns) - 1) // 4)
+            )
+        else:
+            inside = _convex_refine_sql(zones, x, y)
+        return cand.where(F.expr(f"{in_run} AND (NOT _bnd OR ({inside}))")).drop(*aux)
 
     zones_b = spark.sparkContext.broadcast(
         {z["zone_id"]: [p for p in z["parts"]] for z in zones}
@@ -313,9 +287,10 @@ def pip_join(
         return pd.Series(out)
 
     return (
-        cand.withColumn("_in", _pip(F.col(x), F.col(y), F.col("zone_id"), F.col("boundary")))
+        cand.where(F.expr(in_run))
+        .withColumn("_in", _pip(F.col(x), F.col(y), F.col("zone_id"), F.col("_bnd")))
         .where(F.col("_in"))
-        .drop("_in", "boundary", "cell_id")
+        .drop("_in", *aux)
     )
 
 
@@ -622,15 +597,16 @@ def pip_join_df(
     # HOF time on 4.4M boundary candidates at bench scale). Cyclic padding
     # repeats real edges, so the AND is unchanged, and each term is the
     # SAME arithmetic shape as _convex_refine_cond — kept rows are
-    # bit-identical. Rings with more than _REFINE_MAX_EDGES edges keep the
+    # bit-identical. Rings with more than _MAX_EDGE_COLS edges keep the
     # HOF array path (one extra O(parts) aggregate decides, ≪ the cover).
-    kmax_row = rings.select(F.max(F.size("xs")).alias("k")).first()
-    kmax = int(kmax_row["k"] or 0)
+    # A ring has size - 1 edges when closed and size edges when open.
     closed = (F.element_at("xs", 1) == F.element_at("xs", -1)) & (
         F.element_at("ys", 1) == F.element_at("ys", -1)
     )
     m = F.when(closed, F.size("xs") - 1).otherwise(F.size("xs"))
-    if 0 < kmax - 1 <= _MAX_EDGE_COLS:
+    kmax_row = rings.select(F.max(F.when(F.size("xs") >= 2, m)).alias("k")).first()
+    kmax = int(kmax_row["k"] or 0)
+    if 0 < kmax <= _MAX_EDGE_COLS:
         coefs = []
         for k in range(kmax):
             j = F.pmod(F.lit(k), m) + 1

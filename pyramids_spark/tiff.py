@@ -900,13 +900,14 @@ def write_cog_parts(
     # packed shuffle keys (guide §2.3): rc = row·2³² + col and pid =
     # pi·2³² + pj replace four longs; 2³² multipliers decode exactly for
     # any |coord| < 2³¹ so the extent guard sees the original cells
+    # (row is cast first: an int shift by 32 is a shift by 0)
     keys = spark.createDataFrame(
         [((i << 32) + j,) for i in range(npi) for j in range(npj)],
         "_pid long",
     )
     keyed = cells_df.where(F.col("value").isNotNull()).select(
         "band",
-        (F.shiftleft(F.col("row"), 32) + F.col("col")).alias("rc"),
+        (F.shiftleft(F.col("row").cast("long"), 32) + F.col("col")).alias("rc"),
         "value",
         (F.shiftleft((F.col("row") / sh).cast("long"), 32)
          + (F.col("col") / sw).cast("long")).alias("_pid"),

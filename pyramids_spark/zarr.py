@@ -466,9 +466,10 @@ def write_zarr(
     # packed shuffle keys (guide §2.3): rc = row·2³² + col and cid =
     # ci·2³² + cj replace four longs; 2³² multipliers decode exactly for
     # any |coord| < 2³¹, so behaviour on out-of-extent inputs is unchanged
+    # (row is cast first: an int shift by 32 is a shift by 0)
     keyed = cells_df.where(F.col("value").isNotNull()).select(
         "band",
-        (F.shiftleft(F.col("row"), 32) + F.col("col")).alias("rc"),
+        (F.shiftleft(F.col("row").cast("long"), 32) + F.col("col")).alias("rc"),
         "value",
         (F.shiftleft((F.col("row") / div_r).cast("long"), 32)
          + (F.col("col") / div_c).cast("long")).alias("cid"),

@@ -330,3 +330,181 @@ def test_pip_join_df_hot_spot_skew_still_exact(spark):
     b = {(r["doc_id"], r["zone_id"])
          for r in pip.pip_join_df(pts, zdf, zoom=6).select("doc_id", "zone_id").collect()}
     assert a == b and len(a) > 0
+
+
+def test_pip_join_df_open_17_vertex_ring_keeps_edge_cap(spark):
+    """An OPEN ring of 17 vertices has 17 edges: one past the flat
+    coefficient cap, so it must take the array refine (no ``e16_*``
+    columns) and still keep exactly the ray-cast rows."""
+    ang = np.linspace(0, 2 * np.pi, 18)[:-1]
+    ring = np.stack([10.0 * np.cos(ang), 10.0 * np.sin(ang)], axis=1)
+    zones = synth.zone_polygons(3, "hex") + [{"zone_id": 17, "parts": [ring]}]
+    zdf = _zones_as_df(spark, zones)
+    pts = synth.doc_points(spark, 3000)
+    auto = pip.pip_join_df(pts, zdf, zoom=7)
+    plan = auto._jdf.queryExecution().executedPlan().toString()
+    assert f"e{pip._MAX_EDGE_COLS}_xa" not in plan
+    a = {(r["doc_id"], r["zone_id"]) for r in auto.select("doc_id", "zone_id").collect()}
+    b = {(r["doc_id"], r["zone_id"])
+         for r in pip.pip_join_df(pts, zdf, zoom=7, refine="udf")
+         .select("doc_id", "zone_id").collect()}
+    assert a == b and any(z == 17 for _, z in a)
+
+
+# --- run-length cover --------------------------------------------------------
+
+
+def _star(cx, cy, r, n=7):
+    """Concave zone: a ccw star with ``n`` points."""
+    ang = np.linspace(0, 2 * np.pi, 2 * n + 1)[:-1]
+    rad = np.where(np.arange(2 * n) % 2 == 0, r, 0.45 * r)
+    return np.stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)], axis=1)
+
+
+def _run_cases():
+    rng = np.random.default_rng(2024)
+    stars = [{"zone_id": i, "parts": [_star(*rng.uniform(-150, 150, 1),
+                                             *rng.uniform(-60, 60, 1), rng.uniform(3, 15))]}
+             for i in range(5)]
+    w, h = 360.0 / 64, 180.0 / 64  # zoom-6 cell size
+    corners = [{"zone_id": 0, "parts": [np.array(
+        [[-4 * w, -2 * h], [3 * w, -2 * h], [3 * w, 5 * h], [-4 * w, 5 * h]])]},
+               {"zone_id": 1, "parts": [np.array(
+        [[10 * w, 0.0], [14 * w, 4 * h], [10 * w, 8 * h], [6 * w, 4 * h]])]}]
+    clamped = [{"zone_id": 0, "parts": [np.array(
+        [[170.0, 80.0], [185.0, 80.0], [185.0, 95.0], [170.0, 95.0]])]},
+               {"zone_id": 1, "parts": [np.array(
+        [[-185.0, -95.0], [-160.0, -95.0], [-160.0, -70.0], [-185.0, -70.0]])]},
+               {"zone_id": 2, "parts": [np.array(
+        [[-200.0, -5.0], [200.0, -5.0], [200.0, 5.0], [-200.0, 5.0]])]}]
+    return {
+        "convex": (synth.zone_polygons(6, "hex", seed=7), 9),
+        "concave": (stars, 9),
+        "multi": (synth.zone_polygons(5, "multi", seed=11), 8),
+        "zoom3": (synth.zone_polygons(6, "hex", seed=13), 3),
+        "corners": (corners, 6),
+        "clamped": (clamped, 6),
+    }
+
+
+@pytest.mark.parametrize("case", ["convex", "concave", "multi", "zoom3", "corners", "clamped"])
+def test_zone_runs_expand_to_zone_cover(case):
+    """Expanding the runs reproduces ``zone_cover(..., "intersects")`` row
+    for row (zone_id, cell_id, boundary); runs stay inside one block of
+    ``2**b`` cells and are maximal inside it."""
+    zones, zoom = _run_cases()[case]
+    b = min(5, zoom)
+    runs = pip.zone_runs(zones, zoom)
+    cover = pip.zone_cover(zones, zoom, "intersects")
+    assert len(runs) > 0 and len(runs) <= len(cover)
+    rkey, lo, hi = (runs[c].to_numpy() for c in ("_rkey", "_lo", "_hi"))
+    cy, blk = rkey >> (zoom - b), rkey & ((1 << (zoom - b)) - 1)
+    assert ((lo >> b) == blk).all() and ((hi >> b) == blk).all() and (lo <= hi).all()
+    n = hi - lo + 1
+    cx = np.repeat(lo, n) + np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n)
+    got = pd.DataFrame({
+        "zone_id": np.repeat(runs["zone_id"].to_numpy(), n),
+        "cell_id": cells.pack(cx, np.repeat(cy, n), zoom),
+        "boundary": np.repeat(runs["_bnd"].to_numpy(), n),
+    }).sort_values(["zone_id", "cell_id"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, cover.astype(got.dtypes.to_dict()))
+    # maximal: two runs of one zone in one block touch only across a flag change
+    r = runs.sort_values(["zone_id", "_rkey", "_lo"]).to_numpy()
+    same = (r[1:, 0] == r[:-1, 0]) & (r[1:, 1] == r[:-1, 1])
+    touch = r[1:, 2] == r[:-1, 3] + 1
+    assert not (same & touch & (r[1:, 4] == r[:-1, 4])).any()
+
+
+@pytest.mark.parametrize("case", ["convex", "concave", "multi"])
+def test_pip_join_at_run_ends_and_block_edges(spark, case):
+    """Points at the first and last cell of every run, and just either
+    side of each run's outer cell edges (so on both sides of every block
+    boundary a run was split at), match the ray-cast oracle."""
+    zones, _ = _run_cases()[case]
+    zoom = 7
+    b = min(5, zoom)
+    runs = pip.zone_runs(zones, zoom)
+    rkey, lo, hi = (runs[c].to_numpy() for c in ("_rkey", "_lo", "_hi"))
+    cy = rkey >> (zoom - b)
+    # the case must hold runs split at a block boundary (and only there)
+    nxt = pd.merge(runs.assign(_cy=cy, _n=hi + 1), runs.assign(_cy=cy),
+                   left_on=["zone_id", "_cy", "_n", "_bnd"], right_on=["zone_id", "_cy", "_lo", "_bnd"])
+    assert len(nxt) > 0 and (nxt["_n"] % (1 << b) == 0).all()
+    lx0, ly0, lx1, ly1 = cells.cell_bounds_np(lo, cy, zoom)
+    hx0, hy0, hx1, hy1 = cells.cell_bounds_np(hi, cy, zoom)
+    ymid = (ly0 + ly1) / 2
+    eps = 1e-7
+    xs = np.concatenate([(lx0 + lx1) / 2, (hx0 + hx1) / 2, lx0 - eps, lx0 + eps, hx1 - eps, hx1 + eps])
+    ys = np.tile(ymid, 6)
+    keys = np.arange(len(xs))
+    pts = spark.createDataFrame(pd.DataFrame({"key": keys, "x": xs, "y": ys}))
+    exp = set()
+    for z in zones:
+        m = np.zeros(len(xs), bool)
+        for part in z["parts"]:
+            m |= cells.points_in_polygon(xs, ys, np.asarray(part))
+        exp |= {(int(k), z["zone_id"]) for k in keys[m]}
+    for refine in ("auto", "udf"):
+        got = {(r["key"], r["zone_id"])
+               for r in pip.pip_join(pts, zones, zoom=zoom, refine=refine).select("key", "zone_id").collect()}
+        assert got == exp and len(exp) > 0, refine
+
+
+def _jobs_run_while(spark, group, build):
+    """Job ids the status tracker saw under ``group`` while ``build()`` ran."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "building must run no Spark job")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store fills from one listener queue: once a later job
+    # shows up, every job the build could have started has been recorded
+    sc.setJobGroup(group + "-flush", "flush")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(group + "-flush") and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(group + "-flush")
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def test_building_pip_join_and_zonal_runs_no_job(spark):
+    from pyramids_spark.operators import zonal
+
+    pts = synth.doc_points(spark, 1000).withColumn("v", F.col("key").cast("double"))
+
+    def build():
+        pip.pip_join(pts, synth.zone_polygons(10, "hex"), zoom=11)
+        pip.pip_join(pts, synth.zone_polygons(4, "multi"), zoom=7)
+        pip.pip_join(pts, [{"zone_id": 0, "parts": [_star(0.0, 0.0, 10.0)]}], zoom=7)
+        zonal.zonal_stats_points(pts, synth.zone_polygons(5, "box"), "v", zoom=8)
+
+    assert _jobs_run_while(spark, "pip-build", build) == []
+
+
+def test_flagship_plan_one_broadcast_join_with_small_build_side(spark):
+    """The flagship shape (10 hexagons at zoom 11, zoom-12 tile rollup)
+    plans ONE BroadcastHashJoin whose build side holds at most a tenth
+    as many rows as the cover has cells."""
+    zones = synth.zone_polygons(10, "hex")
+    hits = pip.pip_join(synth.doc_points(spark, 1000), zones, zoom=11)
+    cx, cy = cells.geo_cell_col(F.col("x"), F.col("y"), 12)
+    agg = (
+        hits.withColumn("tile_id", cells.cell_id_col(cx, cy, 12))
+        .groupBy("zone_id", "tile_id").agg(F.count(F.lit(1)).alias("n"))
+        .groupBy("zone_id").agg(F.sum("n").alias("n_docs"), F.count(F.lit(1)).alias("n_tiles"))
+    )
+    qe = agg._jdf.queryExecution()
+    assert qe.executedPlan().toString().count("BroadcastHashJoin") == 1
+    leaves = qe.optimizedPlan().collectLeaves()
+    build_rows = [leaves.apply(i).data().size() for i in range(leaves.size())
+                  if leaves.apply(i).nodeName() == "LocalRelation"]
+    n_cells = len(pip.zone_cover(zones, 11, "intersects"))
+    assert len(build_rows) == 1 and 0 < 10 * build_rows[0] <= n_cells

@@ -1219,3 +1219,21 @@ def test_geotiff_parallel_staged_guards(spark, tmp_path):
         SparkDataset(bad, g).to_cog(p, levels=(), tile=(4, 4),
                                     parallel=True)
     assert not os.path.exists(p + "._tiles")
+
+
+def test_cog_parts_int_typed_cell_table_roundtrips(spark, tmp_path):
+    """IntegerType row/col must pack the ``rc`` shuffle key as a long: a
+    Java int shift by 32 is a shift by 0, which folds rc to row + col."""
+    from pyramids_spark import tiff
+
+    g = Grid(x0=0.0, y0=256.0, cell=1.0, rows=256, cols=256)
+    src = grid_df(spark, g).select(
+        *[F.col(c).cast("int") for c in ("band", "row", "col")], "value"
+    )
+    out = str(tmp_path / "parts")
+    tiff.write_cog_parts(src, g, 1, out, shard=(128, 128), tile=(64, 64))
+    back, _, _ = tiff.read_geotiff_parts(spark, out)
+    a = src.select("band", "row", "col", "value").toPandas().sort_values(["row", "col"])
+    b = back.select("band", "row", "col", "value").toPandas().sort_values(["row", "col"])
+    assert len(a) == 256 * 256
+    np.testing.assert_array_equal(a.to_numpy(np.float64), b.to_numpy(np.float64))

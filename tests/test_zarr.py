@@ -489,3 +489,21 @@ def test_zarr_v3_inline_consolidated_metadata(spark, tmp_path):
     del cm["metadata"]["pr"]
     json.dump(root, open(os.path.join(store, "zarr.json"), "w"))
     assert Z.list_zarr_arrays(store) == ["time", "x", "y"]
+
+
+def test_zarr_int_typed_cell_table_roundtrips(spark, tmp_path):
+    """IntegerType row/col must pack the ``rc`` shuffle key as a long: a
+    Java int shift by 32 is a shift by 0, which folds rc to row + col."""
+    from pyramids_spark import zarr
+
+    g = Grid(x0=0.0, y0=256.0, cell=1.0, rows=256, cols=256)
+    src = grid_df(spark, g).select(
+        *[F.col(c).cast("int") for c in ("band", "row", "col")], "value"
+    )
+    store = str(tmp_path / "zi")
+    zarr.write_zarr(src, g, store, chunks=(64, 64))
+    back, _ = zarr.read_zarr(spark, store)
+    a = src.select("band", "row", "col", "value").toPandas().sort_values(["row", "col"])
+    b = back.select("band", "row", "col", "value").toPandas().sort_values(["row", "col"])
+    assert len(a) == 256 * 256
+    np.testing.assert_array_equal(a.to_numpy(np.float64), b.to_numpy(np.float64))
