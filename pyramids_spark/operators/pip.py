@@ -4,28 +4,33 @@ Reference semantics: ``MeshSpatialIndex.locate_faces`` — point × polygon with
 predicate ``within`` (``/root/reference/src/pyramids/netcdf/ugrid/
 spatial.py:195-224``: STRtree bulk query). Our distributed plan:
 
-1. **Cover** (driver/broadcast side): each polygon → covering cells at a
+1. **Cover** (build side): each polygon → covering cells at a
    pruning zoom, split into *interior* cells (fully inside — candidate rows
    need NO exact test) and *boundary* cells (need ray-cast refinement).
    The cells ship run-length encoded: one row per maximal stretch of
    consecutive cells in one cell row with one boundary flag, split at
-   ``2**b``-cell blocks (``b = min(5, zoom)``) and keyed by the block
-   ``_rkey``. At zoom 11 ten hexagons cover ~10^5 cells but only ~7.5·10^3
-   runs — the raster∩vector "intersection file" of *Raptor* (VLDB 2019).
-   Polygon sets are small (zones/dims); the cover runs in numpy and ships as
-   a broadcast equi-join side. [At 10^12 docs the polygon side stays ≪ the
-   doc side, so broadcast-hash-join avoids shuffling the big table at all.]
+   ``2**b``-cell blocks (``b = min(5, zoom)`` for a driver list of zones,
+   ``min(3, zoom)`` for a ring DataFrame) and keyed by the block ``_rkey``.
+   At zoom 11 ten hexagons cover ~10^5 cells but only ~7.5·10^3 runs — the
+   raster∩vector "intersection file" of *Raptor* (VLDB 2019).
+   A driver-list polygon set (``pip_join``) is covered in numpy on the
+   driver; a DataFrame of ring parts (``pip_join_df``) in one
+   ``mapInPandas`` on the executors. [At 10^12 docs the polygon side stays
+   ≪ the doc side, so broadcast-hash-join avoids shuffling the big table.]
 2. **Encode** (distributed, JVM-side): each point row gets its cell column
    ``_cx`` and block key ``_rkey`` via pure column arithmetic — no UDF,
    stays in whole-stage codegen.
-3. **Join**: ``points ⋈ broadcast(runs) ON _rkey`` — Catalyst emits a
-   BroadcastHashJoin; the 10^12-row side is never shuffled. The run test
-   ``_cx BETWEEN _lo AND _hi`` and, for convex zones, the half-plane
-   refine of boundary runs are ONE ``F.expr`` string that lands in the
-   join condition.
-4. **Refine**: boundary-cell candidates run a vectorized numpy ray-cast
-   (``cells.points_in_polygon``) inside an Arrow-batched pandas UDF, grouped
-   by zone inside each batch (no per-row Python).
+3. **Join**: ``points ⋈ runs ON _rkey`` — a broadcast run table makes
+   Catalyst emit a BroadcastHashJoin; the 10^12-row side is never
+   shuffled. The run test ``_cx BETWEEN _lo AND _hi`` and the refine of
+   boundary runs are ONE ``F.expr`` string that lands in the join
+   condition.
+4. **Refine**: only boundary-run candidates are tested. ``pip_join_df``
+   (polygon side a DataFrame, :func:`pip_join_df`) ray-casts in the JVM
+   against the part's edges carried on the run, with the arithmetic of
+   ``cells.points_in_polygon`` — no Python UDF. ``pip_join`` (polygon
+   side a driver list) tests convex zones by half-planes and ray-casts
+   the others in an Arrow-batched numpy pandas UDF.
 
 Skew: hot cells (dense doc clusters) inflate single tasks. Because the join
 is broadcast there is no shuffle to skew; the refinement is per-batch
@@ -100,32 +105,52 @@ def zone_cover(zones: list[dict], zoom: int, mode: str = "center") -> pd.DataFra
 _RUN_BLOCK_BITS = 5  # runs never cross a 32-cell block of a cell row
 
 
-def zone_runs(zones: list[dict], zoom: int) -> pd.DataFrame:
-    """Run-length form of ``zone_cover(zones, zoom, "intersects")``:
-    ``(zone_id, _rkey, _lo, _hi, _bnd)``, one row per maximal stretch of
-    cells ``_lo..._hi`` (column index ``cx``) of one cell row that share
-    the boundary flag ``_bnd`` and one ``2**b``-cell block,
-    ``_rkey = (cy << (zoom - b)) + (cx >> b)`` with ``b = min(5, zoom)``.
+def _runs(key: np.ndarray, cx: np.ndarray, cy: np.ndarray, bnd: np.ndarray, zoom: int, b: int):
+    """Run-length compression of covering cells ``(cx, cy)`` grouped by
+    ``key`` with boundary flags ``bnd`` → ``(first, rkey, lo, hi)``, one
+    entry per maximal stretch of cells ``lo..hi`` of one cell row that
+    share ``key``, the flag and one ``2**b``-cell block; ``first`` indexes
+    the run's first cell in the input and
+    ``rkey = (cy << (zoom - b)) + (cx >> b)``.
     The block split bounds how many runs share a join key, so the hash
-    side stays an equi-join and ``BETWEEN`` only picks among a few rows.
-    Expanding the runs gives back the cover cell for cell."""
-    cov = zone_cover(zones, zoom, "intersects")
-    zid = cov["zone_id"].to_numpy(np.int64)
-    bnd = cov["boundary"].to_numpy(bool)
-    cx, cy = cells.unpack(cov["cell_id"].to_numpy(np.int64), zoom)
-    b = min(_RUN_BLOCK_BITS, zoom)
+    side stays an equi-join and ``BETWEEN`` only picks among a few rows."""
     rkey = (cy << (zoom - b)) + (cx >> b)
-    o = np.lexsort((cx, rkey, zid))
-    zid, rkey, cx, bnd = zid[o], rkey[o], cx[o], bnd[o]
+    o = np.lexsort((cx, rkey, key))
+    key, rkey, cx, bnd = key[o], rkey[o], cx[o], bnd[o]
     start = np.ones(len(cx), dtype=bool)
     start[1:] = (
-        (zid[1:] != zid[:-1]) | (rkey[1:] != rkey[:-1])
+        (key[1:] != key[:-1]) | (rkey[1:] != rkey[:-1])
         | (cx[1:] != cx[:-1] + 1) | (bnd[1:] != bnd[:-1])
     )
     end = np.ones(len(cx), dtype=bool)
     end[:-1] = start[1:]
-    return pd.DataFrame({"zone_id": zid[start], "_rkey": rkey[start],
-                         "_lo": cx[start], "_hi": cx[end], "_bnd": bnd[start]})
+    return o[start], rkey[start], cx[start], cx[end]
+
+
+def zone_runs(zones: list[dict], zoom: int) -> pd.DataFrame:
+    """Run-length form of ``zone_cover(zones, zoom, "intersects")``:
+    ``(zone_id, _rkey, _lo, _hi, _bnd)``, one row per run of :func:`_runs`
+    keyed by zone, ``b = min(5, zoom)``. Expanding the runs gives back the
+    cover cell for cell."""
+    cov = zone_cover(zones, zoom, "intersects")
+    zid = cov["zone_id"].to_numpy(np.int64)
+    bnd = cov["boundary"].to_numpy(bool)
+    cx, cy = cells.unpack(cov["cell_id"].to_numpy(np.int64), zoom)
+    first, rkey, lo, hi = _runs(zid, cx, cy, bnd, zoom, min(_RUN_BLOCK_BITS, zoom))
+    return pd.DataFrame({"zone_id": zid[first], "_rkey": rkey, "_lo": lo, "_hi": hi,
+                         "_bnd": bnd[first]})
+
+
+def _join_runs(points: DataFrame, runs: DataFrame, zoom: int, bits: int, x: str, y: str) -> DataFrame:
+    """Points keyed by their cell column ``_cx`` and ``2**bits``-cell block
+    ``_rkey`` in pure column math (codegen, no UDF) ⋈ ``runs`` on ``_rkey``."""
+    cx, cy = cells.geo_cell_col(F.col(x), F.col(y), zoom)
+    return points.withColumns(
+        {"_cx": cx, "_rkey": F.shiftleft(cy, zoom - bits) + F.shiftright(cx, bits)}
+    ).join(runs, "_rkey")
+
+
+_IN_RUN = "_cx BETWEEN _lo AND _hi"
 
 
 def with_cell_id(points: DataFrame, zoom: int, x: str = "x", y: str = "y") -> DataFrame:
@@ -248,13 +273,9 @@ def pip_join(
     schema = "zone_id long, _rkey long, _lo long, _hi long, _bnd boolean" + "".join(
         f", {c} double" for c in runs.columns[5:]
     )
-    bits = min(_RUN_BLOCK_BITS, zoom)
-    cx, cy = cells.geo_cell_col(F.col(x), F.col(y), zoom)
-    cand = points.withColumns(
-        {"_cx": cx, "_rkey": F.shiftleft(cy, zoom - bits) + F.shiftright(cx, bits)}
-    ).join(F.broadcast(spark.createDataFrame(runs, schema=schema)), "_rkey")
+    cand = _join_runs(points, F.broadcast(spark.createDataFrame(runs, schema=schema)),
+                      zoom, min(_RUN_BLOCK_BITS, zoom), x, y)
     aux = ["_cx"] + [c for c in runs.columns if c != "zone_id"]
-    in_run = "_cx BETWEEN _lo AND _hi"
 
     if refine == "expr":
         if edges is not None:
@@ -264,7 +285,7 @@ def pip_join(
             )
         else:
             inside = _convex_refine_sql(zones, x, y)
-        return cand.where(F.expr(f"{in_run} AND (NOT _bnd OR ({inside}))")).drop(*aux)
+        return cand.where(F.expr(f"{_IN_RUN} AND (NOT _bnd OR ({inside}))")).drop(*aux)
 
     zones_b = spark.sparkContext.broadcast(
         {z["zone_id"]: [p for p in z["parts"]] for z in zones}
@@ -287,7 +308,7 @@ def pip_join(
         return pd.Series(out)
 
     return (
-        cand.where(F.expr(in_run))
+        cand.where(F.expr(_IN_RUN))
         .withColumn("_in", _pip(F.col(x), F.col(y), F.col("zone_id"), F.col("_bnd")))
         .where(F.col("_in"))
         .drop("_in", *aux)
@@ -393,49 +414,44 @@ def _convex_ccw_batch(X: np.ndarray, Y: np.ndarray, lens: np.ndarray) -> np.ndar
     )
 
 
+def _ring_buckets(pdf: pd.DataFrame):
+    """Ring parts ``xs``/``ys`` of one Arrow batch as padded ``(P, V)``
+    arrays → yields ``(rows, X, Y, lens)``, ``rows`` indexing the batch.
+    Parts are bucketed by padded ring length (next power of two, at least
+    4) so one 10^5-vertex coastline doesn't pad every quad in the batch to
+    its width; pad = repeat last vertex (no-op edge). Degenerate empty
+    rings are skipped: they have no cover."""
+    xs_l, ys_l = pdf["xs"].to_list(), pdf["ys"].to_list()
+    lens = np.fromiter((len(a) for a in xs_l), np.int64, len(xs_l))
+    buckets = np.maximum(4, 1 << np.ceil(np.log2(np.maximum(lens, 1))).astype(np.int64))
+    for V in np.unique(buckets[lens > 0]):
+        sel = np.flatnonzero((buckets == V) & (lens > 0))
+        X = np.empty((len(sel), V), dtype=np.float64)
+        Y = np.empty((len(sel), V), dtype=np.float64)
+        for i, r in enumerate(sel):
+            lv = lens[r]
+            X[i, :lv], Y[i, :lv] = xs_l[r], ys_l[r]
+            X[i, lv:], Y[i, lv:] = xs_l[r][lv - 1], ys_l[r][lv - 1]
+        yield sel, X, Y, lens[sel]
+
+
 def zone_cover_df(rings: DataFrame, zoom: int, mode: str = "intersects") -> DataFrame:
     """Distributed twin of :func:`zone_cover`: the polygon side is a
     DataFrame ``(zone_id, part_key, xs, ys)`` — one row per ring part, ring
     vertex arrays as columns — and the cover runs as ``mapInPandas`` over
     the partitioned ring table, so a 10^7-face mesh (reference
     ``locate_faces``, ``ugrid/spatial.py:195-224``) never materializes on
-    the driver. Emits the COMPACT cover ``(zone_id, part_key, cell_id,
-    boundary)`` — ring arrays are NOT carried onto the per-cell rows (a
-    10^5-vertex coastline × 10^4 covering cells would explode the cover by
-    V×); refinement re-joins the ring table by (zone_id, part_key) on
-    boundary candidates only."""
+    the driver. Emits the per-cell cover ``(zone_id, part_key, cell_id,
+    boundary, convex)``; :func:`pip_join_df` ships the same cover as runs."""
 
     def gen(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
             zid = pdf["zone_id"].to_numpy(dtype=np.int64)
             pk = pdf["part_key"].to_numpy(dtype=np.int64)
-            xs_l, ys_l = pdf["xs"].to_list(), pdf["ys"].to_list()
-            lens = np.fromiter((len(a) for a in xs_l), np.int64, len(xs_l))
-            if (lens == 0).any():  # degenerate empty rings: no cover
-                keep = np.flatnonzero(lens > 0)
-                zid, pk = zid[keep], pk[keep]
-                xs_l = [xs_l[i] for i in keep]
-                ys_l = [ys_l[i] for i in keep]
-                lens = lens[keep]
-            if len(lens) == 0:
-                continue
             out = []
-            # bucket parts by padded ring length (next power of two) so one
-            # 10^5-vertex coastline doesn't pad every quad in the batch to
-            # its width; pad = repeat last vertex (no-op edge)
-            buckets = np.maximum(4, 1 << np.ceil(np.log2(np.maximum(lens, 1))).astype(np.int64))
-            for V in np.unique(buckets):
-                sel = np.flatnonzero(buckets == V)
-                X = np.empty((len(sel), V), dtype=np.float64)
-                Y = np.empty((len(sel), V), dtype=np.float64)
-                for i, r in enumerate(sel):
-                    lv = lens[r]
-                    X[i, :lv], Y[i, :lv] = xs_l[r], ys_l[r]
-                    X[i, lv:], Y[i, lv:] = xs_l[r][lv - 1], ys_l[r][lv - 1]
+            for sel, X, Y, lens in _ring_buckets(pdf):
                 prow, cell_id, boundary = _parts_cover_batch(X, Y, zoom, mode)
-                conv = _convex_ccw_batch(X, Y, lens[sel])
+                conv = _convex_ccw_batch(X, Y, lens)
                 out.append(
                     pd.DataFrame(
                         {
@@ -456,54 +472,81 @@ def zone_cover_df(rings: DataFrame, zoom: int, mode: str = "intersects") -> Data
     )
 
 
-@F.pandas_udf(T.BooleanType())
-def _pip_rows_udf(
-    px: pd.Series, py: pd.Series, pk: pd.Series, xs: pd.Series, ys: pd.Series
-) -> pd.Series:
-    """Ray-cast refinement where each candidate row CARRIES its ring arrays:
-    rows are grouped by part inside the Arrow batch (argsort + split) so the
-    ray cast runs once per polygon, vectorized over its points."""
-    n = len(px)
-    out = np.zeros(n, dtype=bool)
-    if n == 0:
-        return pd.Series(out)
-    pxv, pyv, pkv = px.to_numpy(), py.to_numpy(), pk.to_numpy()
-    order = np.argsort(pkv, kind="stable")
-    spk = pkv[order]
-    starts = np.flatnonzero(np.r_[True, spk[1:] != spk[:-1]])
-    bounds = np.r_[starts, n]
-    for i in range(len(starts)):
-        idx = order[bounds[i] : bounds[i + 1]]
-        poly = np.stack(
-            [
-                np.asarray(xs.iloc[idx[0]], dtype=np.float64),
-                np.asarray(ys.iloc[idx[0]], dtype=np.float64),
-            ],
-            axis=1,
-        )
-        out[idx] = cells.points_in_polygon(pxv[idx], pyv[idx], poly)
-    return pd.Series(out)
+# 8-cell blocks, not zone_runs' 32: a dense ring table piles runs of many
+# parts onto one key, and every point tests each run of its key (12k
+# hexagons at zoom 10: 24 runs per 32-cell key, 7 per 8-cell key; on
+# 32-cell keys the 8M-point join took 1.7x as long, PLANS.md §6g)
+_PART_RUN_BLOCK_BITS = 3
+# boundary parts with more edges ray-cast in an aggregate(); a hexagon
+# fits unpadded (8 pads it by 4 doubles a run and measured slower on the
+# 8M-point join, 16 slower again; PLANS.md §6g)
+_UNROLL_EDGES = 6
 
 
-def _convex_refine_cond(px: F.Column, py: F.Column, xs: F.Column, ys: F.Column) -> F.Column:
-    """Strict-interior half-plane test for a ccw-convex ring carried as
-    ARRAY columns — higher-order functions, all JVM, no Python worker
-    (the DataFrame-side analogue of pip_join's edge-coefficient refine;
-    same cross-product arithmetic shape, so kept rows are bit-identical
-    to the oracle's convex SQL). Handles open and closed rings."""
-    n = F.size(xs)
-    closed = (F.element_at(xs, 1) == F.element_at(xs, -1)) & (
-        F.element_at(ys, 1) == F.element_at(ys, -1)
+def _part_runs_df(rings: DataFrame, zoom: int) -> DataFrame:
+    """Run-length cover of a ring-part table ``(zone_id, xs, ys)`` in ONE
+    ``mapInPandas``: ``(zone_id, _rkey, _lo, _hi, _m, _e)``, the runs of
+    :func:`_runs` keyed by part, ``b = min(3, zoom)``. Boundary runs carry
+    their part's ray-cast input — ``_m`` edges and the flat closed vertex list
+    ``_e = [x0, y0, …, x_{m-1}, y_{m-1}, x0, y0]``, padded to
+    ``_UNROLL_EDGES`` edges by repeating ``(x0, y0)`` (zero-length edges
+    cross nothing); interior runs have ``_m = 0`` and no ``_e``. A ring
+    closes when its last vertex is ``allclose`` to its first, as in
+    :func:`cells.points_in_polygon`; parts with fewer than 3 edges enclose
+    no point and emit nothing."""
+
+    def gen(batches):
+        for pdf in batches:
+            zid = pdf["zone_id"].to_numpy(dtype=np.int64)
+            out = []
+            for sel, X, Y, lens in _ring_buckets(pdf):
+                last = np.arange(len(sel)), lens - 1
+                m = lens - (np.isclose(X[:, 0], X[last]) & np.isclose(Y[:, 0], Y[last]))
+                prow, cell_id, bnd = _parts_cover_batch(X, Y, zoom, "intersects")
+                keep = m[prow] >= 3
+                prow, bnd = prow[keep], bnd[keep]
+                cx, cy = cells.unpack(cell_id[keep], zoom)
+                first, rkey, lo, hi = _runs(prow, cx, cy, bnd, zoom, min(_PART_RUN_BLOCK_BITS, zoom))
+                part, bnd = prow[first], bnd[first]
+                verts = {}
+                for p in np.unique(part[bnd]):
+                    idx = np.arange(max(m[p], _UNROLL_EDGES) + 1)
+                    idx[m[p]:] = 0
+                    verts[p] = np.stack([X[p, idx], Y[p, idx]], axis=1).ravel()
+                out.append(pd.DataFrame({
+                    "zone_id": zid[sel][part], "_rkey": rkey, "_lo": lo, "_hi": hi,
+                    "_m": np.where(bnd, m[part], 0).astype(np.int32),
+                    "_e": pd.Series([verts[p] if b else None for p, b in zip(part, bnd)],
+                                    dtype=object),  # empty: not a float64 column
+                }))
+            if out:
+                yield pd.concat(out, ignore_index=True)
+
+    return rings.select("zone_id", "xs", "ys").mapInPandas(
+        gen, "zone_id long, _rkey long, _lo long, _hi long, _m int, _e array<double>"
     )
-    m = F.when(closed, n - 1).otherwise(n)
 
-    def edge_ok(i):
-        j = (i + 1) % m
-        xa, ya = F.element_at(xs, i + 1), F.element_at(ys, i + 1)
-        xb, yb = F.element_at(xs, j + 1), F.element_at(ys, j + 1)
-        return ((xb - xa) * (py - ya) - (yb - ya) * (px - xa)) > 0
 
-    return F.forall(F.transform(F.sequence(F.lit(0), m - 1), edge_ok), lambda b: b)
+def _raycast_sql(x: str, y: str) -> str:
+    """Even-odd ray-cast of point ``(x, y)`` against the vertex list ``_e``
+    of :func:`_part_runs_df` as ONE SQL string: per edge the arithmetic of
+    :func:`cells.points_in_polygon` (so kept rows are bit-identical to it),
+    CASE-guarded so the division only runs when the edge straddles ``y``
+    (never by zero under ANSI mode). Parts with at most ``_UNROLL_EDGES``
+    edges take the unrolled XOR chain, larger ones an ``aggregate()`` over
+    their edges."""
+
+    def cross(k):
+        xa, ya, xb, yb = (f"_e[{k} * 2 + {o}]" for o in range(4))
+        return (f"CASE WHEN ({ya} > `{y}`) != ({yb} > `{y}`) "
+                f"THEN `{x}` < {xa} + (`{y}` - {ya}) * ({xb} - {xa}) / ({yb} - {ya}) "
+                "ELSE false END")
+
+    unrolled = cross(0)
+    for k in range(1, _UNROLL_EDGES):
+        unrolled = f"(({unrolled}) != ({cross(k)}))"
+    return (f"CASE WHEN _m <= {_UNROLL_EDGES} THEN {unrolled} "
+            f"ELSE aggregate(sequence(0, _m - 1), false, (_in, _k) -> _in != ({cross('_k')})) END")
 
 
 def pip_join_df(
@@ -512,144 +555,37 @@ def pip_join_df(
     zoom: int = 8,
     x: str = "x",
     y: str = "y",
-    refine: str = "auto",
 ) -> DataFrame:
-    """DataFrame-native point-in-polygon join (VERDICT r3 next-round #2):
-    ``zones_df`` is ``(zone_id: long, xs: array<double>, ys: array<double>)``
-    — one row per ring part — so the polygon side scales past driver-sized
-    zone lists to the reference's 10^7-face mesh tables (``locate_faces``,
-    ``ugrid/spatial.py:195-224``). Parts of one zone must be disjoint (the
-    standard multi-polygon contract); output is the points' columns +
-    ``zone_id``, one row per containing part — identical to
-    :func:`pip_join` on single-part zone sets.
+    """DataFrame-native point-in-polygon join: ``zones_df`` is
+    ``(zone_id: long, xs: array<double>, ys: array<double>)`` — one row per
+    ring part, open or closed — so the polygon side scales past
+    driver-sized zone lists to the reference's 10^7-face mesh tables
+    (``locate_faces``, ``ugrid/spatial.py:195-224``). Parts of one zone
+    must be disjoint (the standard multi-polygon contract); output is the
+    points' columns + ``zone_id``, one row per containing part, keeping
+    exactly the rows of :func:`cells.points_in_polygon`.
 
-    100-TB plan shape (same decomposition as the broadcast path, with every
-    driver-side step replaced by a distributed twin):
+    One lazy plan, the same three steps as :func:`pip_join` with the
+    driver-side cover replaced by a distributed one (building it runs no
+    Spark job):
 
-    1. cover: ``mapInPandas`` over the ring table → compact
-       ``(zone_id, part_key, cell_id, boundary)`` rows, no driver pass;
-    2. encode: points get ``cell_id`` in pure column math (codegen);
-    3. join: hash equi-join on ``cell_id`` — both sides partition on the
-       key (AQE still broadcasts a genuinely small cover at runtime; for
-       repeated joins bucket both tables by ``cell_id``);
-    4. refine: only BOUNDARY candidates re-join the ring table on
-       ``(zone_id, part_key)`` to pick up vertex arrays, then a vectorized
-       ray-cast batches by part inside each Arrow batch. Interior-cell
-       candidates ship straight to the output — no Python, no ring bytes.
-
-    ``part_key`` is ``xxhash64(zone_id, xs, ys)`` — deterministic across
-    task retries and cluster sizes (a monotonically_increasing_id would
-    not be, breaking the resumability contract); collisions only matter
-    WITHIN one zone_id (the refine join is on both columns) so 64 bits is
-    astronomically safe at 10^7 parts/zone.
-
-    ``refine``: 'auto' — boundary candidates of ccw-CONVEX parts (flagged
-    per part by the cover stage) run the JVM half-plane array test, only
-    concave parts fall back to the vectorized ray-cast UDF; 'udf' — every
-    boundary candidate ray-casts.
+    1. cover: ONE ``mapInPandas`` over the ring table emits the runs of
+       :func:`_part_runs_df`; only boundary runs carry their part's edges;
+    2. encode: points get ``_cx``/``_rkey`` in pure column math (codegen);
+    3. join + refine: ``points ⋈ runs ON _rkey`` with ONE ``F.expr``
+       condition, ``_cx BETWEEN _lo AND _hi AND (_m = 0 OR <ray-cast>)``
+       (:func:`_raycast_sql`) — interior runs keep their rows untested,
+       boundary runs ray-cast in the JVM: no Python UDF. A run table the
+       planner estimates small broadcasts and the point side is never
+       shuffled; a large one is a hash join on ``_rkey`` (AQE can still
+       broadcast it at runtime).
     """
-    rings = zones_df.withColumn(
-        "part_key", F.xxhash64(F.col("zone_id"), F.col("xs"), F.col("ys"))
+    runs = _part_runs_df(zones_df, zoom)
+    return (
+        _join_runs(points, runs, zoom, min(_PART_RUN_BLOCK_BITS, zoom), x, y)
+        .where(F.expr(f"{_IN_RUN} AND (_m = 0 OR {_raycast_sql(x, y)})"))
+        .drop("_cx", "_rkey", "_lo", "_hi", "_m", "_e")
     )
-    # materialize the cover ONCE: every union branch below references it, and
-    # without truncation each branch re-runs the whole cover mapInPandas (the
-    # r6 plan showed 3 MapInPandas + 3 point scans for one query — guide §2.4:
-    # one Exchange-side subtree per distinct consumer is honest, three copies
-    # of the same one is not). localCheckpoint spills to disk past memory, and
-    # the cover is O(zones × cells) ≪ points by construction.
-    cover = zone_cover_df(rings, zoom, "intersects").localCheckpoint()
-    pts = with_cell_id(points, zoom, x, y)
-    pt_cols = points.columns
-    ringsxy = rings.select("zone_id", "part_key", "xs", "ys")
-    cand = pts.join(cover, "cell_id")
-
-    def raycast(df):
-        return (
-            df.withColumn(
-                "_in",
-                _pip_rows_udf(
-                    F.col(x), F.col(y), F.col("part_key"), F.col("xs"), F.col("ys")
-                ),
-            )
-            .where(F.col("_in"))
-            .select(*pt_cols, "zone_id")
-        )
-
-    if refine == "udf":
-        interior = cand.where(~F.col("boundary")).select(*pt_cols, "zone_id")
-        bnd = cand.where(F.col("boundary")).join(ringsxy, ["zone_id", "part_key"])
-        return interior.unionByName(raycast(bnd))
-    # ONE scan of the point side covers interior AND convex-boundary rows:
-    # every cover row has its ring (cover derives from rings; (zone_id,
-    # part_key) is unique per part), so the inner ring join is multiplicity-
-    # preserving and the half-plane test only gates rows where boundary holds.
-    # The concave-boundary branch keeps its own subtree because its pandas
-    # UDF must not run on convex rows (Spark evaluates extracted Python UDFs
-    # unconditionally); its cover-side filter (boundary & !convex) sits below
-    # the join, so AQE collapses the whole branch to empty when every part is
-    # convex — the common mesh case pays ONE point scan instead of r6's three.
-    #
-    # The half-plane test itself runs as FLAT edge-coefficient columns
-    # (pip_join's broadcast-DATA trick, r7): per-part (xa, ya, xb, yb)
-    # doubles padded cyclically to the ring table's max edge count — the
-    # per-row filter is then K fused multiply-compares in whole-stage
-    # codegen instead of a HOF fold over array columns (measured 1.2 s of
-    # HOF time on 4.4M boundary candidates at bench scale). Cyclic padding
-    # repeats real edges, so the AND is unchanged, and each term is the
-    # SAME arithmetic shape as _convex_refine_cond — kept rows are
-    # bit-identical. Rings with more than _MAX_EDGE_COLS edges keep the
-    # HOF array path (one extra O(parts) aggregate decides, ≪ the cover).
-    # A ring has size - 1 edges when closed and size edges when open.
-    closed = (F.element_at("xs", 1) == F.element_at("xs", -1)) & (
-        F.element_at("ys", 1) == F.element_at("ys", -1)
-    )
-    m = F.when(closed, F.size("xs") - 1).otherwise(F.size("xs"))
-    kmax_row = rings.select(F.max(F.when(F.size("xs") >= 2, m)).alias("k")).first()
-    kmax = int(kmax_row["k"] or 0)
-    if 0 < kmax <= _MAX_EDGE_COLS:
-        coefs = []
-        for k in range(kmax):
-            j = F.pmod(F.lit(k), m) + 1
-            jn = F.pmod(F.pmod(F.lit(k), m) + 1, m) + 1
-            coefs += [
-                F.element_at("xs", j).alias(f"e{k}_xa"),
-                F.element_at("ys", j).alias(f"e{k}_ya"),
-                F.element_at("xs", jn).alias(f"e{k}_xb"),
-                F.element_at("ys", jn).alias(f"e{k}_yb"),
-            ]
-        # degenerate (empty/point) rings emit no cover rows, so dropping
-        # them here changes nothing — and keeps ANSI element_at/pmod from
-        # erroring on size-0 arrays
-        ecoef = rings.where(F.size("xs") >= 2).select("zone_id", "part_key", *coefs)
-        halfplane = None
-        for k in range(kmax):
-            c = (
-                (F.col(f"e{k}_xb") - F.col(f"e{k}_xa"))
-                * (F.col(y) - F.col(f"e{k}_ya"))
-                - (F.col(f"e{k}_yb") - F.col(f"e{k}_ya"))
-                * (F.col(x) - F.col(f"e{k}_xa"))
-            ) > 0
-            halfplane = c if halfplane is None else (halfplane & c)
-        easy = (
-            cand.where(~F.col("boundary") | F.col("convex"))
-            .join(ecoef, ["zone_id", "part_key"])
-            .where(~F.col("boundary") | halfplane)
-            .select(*pt_cols, "zone_id")
-        )
-    else:
-        easy = (
-            cand.where(~F.col("boundary") | F.col("convex"))
-            .join(ringsxy, ["zone_id", "part_key"])
-            .where(
-                ~F.col("boundary")
-                | _convex_refine_cond(F.col(x), F.col(y), F.col("xs"), F.col("ys"))
-            )
-            .select(*pt_cols, "zone_id")
-        )
-    hard = cand.where(F.col("boundary") & ~F.col("convex")).join(
-        ringsxy, ["zone_id", "part_key"]
-    )
-    return easy.unionByName(raycast(hard))
 
 
 def salt_col(n_salt: int = 16, row_source: F.Column | None = None) -> F.Column:

@@ -221,27 +221,47 @@ def salted_agg(
     df: DataFrame, group: str, value: str, n_salt: int = 16
 ) -> DataFrame:
     """Two-stage skew-proof aggregation: partial by (group, salt) → final by
-    group. Decomposable stats only (sum/count/min/max → mean/std_pop/var_pop
-    recomposed exactly from Σx, Σx², n). This is the explicit hot-key
-    handling of the north rule; AQE skew-split remains on as backstop."""
+    group. Decomposable stats only: sum/count/min/max merge directly, and
+    the per-salt (count, mean, M2) merge with Chan's pairwise update, so
+    var_pop/std_pop stay accurate for values far from zero (Σx² − (Σx)²/n
+    cancels every digit there). This is the explicit hot-key handling of
+    the north rule; AQE skew-split remains on as backstop."""
     part = (
         df.withColumn("_salt", salt_col(n_salt))
         .groupBy(group, "_salt")
         .agg(
             F.sum(value).alias("_s"),
-            F.sum(F.col(value) * F.col(value)).alias("_s2"),
             F.count(value).alias("_n"),
+            F.avg(value).alias("_mu"),
+            (F.var_pop(value) * F.count(value)).alias("_m2"),
             F.min(value).alias("_mn"),
             F.max(value).alias("_mx"),
         )
     )
+
+    def chan(a, b):
+        n = a["n"] + b["n"]
+        d = b["mu"] - a["mu"]
+        return F.struct(
+            n.alias("n"),
+            (a["mu"] + d * (b["n"] / n)).alias("mu"),
+            (a["m2"] + b["m2"] + d * d * a["n"] * b["n"] / n).alias("m2"),
+        )
+
+    moments = F.aggregate(
+        F.collect_list(F.when(F.col("_n") > 0, F.struct(
+            F.col("_n").alias("n"), F.col("_mu").alias("mu"), F.col("_m2").alias("m2")))),
+        F.struct(F.lit(0).cast("long").alias("n"), F.lit(0.0).alias("mu"), F.lit(0.0).alias("m2")),
+        chan,
+    )
+    var = moments["m2"] / F.sum("_n")
     return part.groupBy(group).agg(
         (F.sum("_s") / F.sum("_n")).alias("mean"),
         F.sum("_s").alias("sum"),
         F.min("_mn").alias("min"),
         F.max("_mx").alias("max"),
-        F.sqrt(F.sum("_s2") / F.sum("_n") - (F.sum("_s") / F.sum("_n")) ** 2).alias("std"),
-        (F.sum("_s2") / F.sum("_n") - (F.sum("_s") / F.sum("_n")) ** 2).alias("var"),
+        F.sqrt(var).alias("std"),
+        var.alias("var"),
         F.sum("_n").alias("count"),
     )
 

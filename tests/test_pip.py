@@ -144,25 +144,38 @@ def _zones_as_df(spark, zones):
     )
 
 
+def _raycast_pairs(pts, zones):
+    """(doc_id, zone_id) of every point inside a zone part by the numpy
+    ray-cast ``cells.points_in_polygon`` — the reference ``pip_join_df``
+    must reproduce row for row."""
+    p = pts.select("doc_id", "x", "y").toPandas()
+    x, y, k = p["x"].to_numpy(), p["y"].to_numpy(), p["doc_id"].to_numpy()
+    out = set()
+    for z in zones:
+        for part in z["parts"]:
+            m = cells.points_in_polygon(x, y, np.asarray(part, dtype=np.float64))
+            out |= {(kk, z["zone_id"]) for kk in k[m].tolist()}
+    return out
+
+
 def test_pip_join_df_matches_broadcast_path(spark):
-    """DataFrame-native polygon side (VERDICT r3 #2) ≡ the broadcast list
-    path on the same zone set — both refine modes of pip_join_df."""
+    """DataFrame-native polygon side (VERDICT r3 #2) keeps exactly the
+    numpy ray-cast rows on the zone set the broadcast list path takes."""
     pts = synth.doc_points(spark, 4000)
     zones = synth.zone_polygons(9, "hex")
     zdf = _zones_as_df(spark, zones)
-    a = pip.pip_join(pts, zones, zoom=7, refine="udf")
-    ka = {(r["doc_id"], r["zone_id"]) for r in a.select("doc_id", "zone_id").collect()}
-    for mode in ("auto", "udf"):
-        b = pip.pip_join_df(pts, zdf, zoom=7, refine=mode)
-        kb = {(r["doc_id"], r["zone_id"]) for r in b.select("doc_id", "zone_id").collect()}
-        assert ka == kb and len(ka) > 0, mode
-        assert set(b.columns) == set(pts.columns) | {"zone_id"}
+    want = _raycast_pairs(pts, zones)
+    b = pip.pip_join_df(pts, zdf, zoom=7)
+    assert {(r["doc_id"], r["zone_id"]) for r in b.select("doc_id", "zone_id").collect()} == want
+    assert len(want) > 0
+    assert set(b.columns) == set(pts.columns) | {"zone_id"}
 
 
-def test_pip_join_df_convex_refine_is_jvm_and_concave_falls_back(spark):
-    """Convex parts must refine via the JVM half-plane array test (no
-    Python eval node in the plan); a CONCAVE part still ray-casts and both
-    modes agree on a mixed zone set."""
+def test_pip_join_df_refine_is_jvm_for_convex_and_concave_parts(spark):
+    """Convex and CONCAVE parts both refine by the JVM ray-cast: the plan
+    holds no Python eval node, exactly one MapInPandas (the cover) and no
+    driver-built LocalTableScan, and a mixed zone set keeps exactly the
+    numpy ray-cast rows."""
     pts = synth.doc_points(spark, 3000)
     zones = synth.zone_polygons(4, "hex")
     # L-shaped (concave) part spanning the hot cell
@@ -170,18 +183,14 @@ def test_pip_join_df_convex_refine_is_jvm_and_concave_falls_back(spark):
                   [0.0, 2.0], [-2.0, 2.0]])
     zones.append({"zone_id": 50, "parts": [L]})
     zdf = _zones_as_df(spark, zones)
-    auto = pip.pip_join_df(pts, zdf, zoom=7, refine="auto")
-    udf = pip.pip_join_df(pts, zdf, zoom=7, refine="udf")
-    ka = {(r["doc_id"], r["zone_id"]) for r in auto.collect()}
-    kb = {(r["doc_id"], r["zone_id"]) for r in udf.collect()}
-    assert ka == kb
-    assert any(z == 50 for _, z in ka)  # the concave zone has hits
-    # the convex branch's keep-condition is JVM whole-stage arithmetic over
-    # flat edge-coefficient columns (r7: replaced the higher-order forall)
-    # — visible in the executed plan text (the concave ray-cast branch
-    # still appears statically in the union but scans only concave parts)
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "e0_xa" in plan and "forall" not in plan
+    df = pip.pip_join_df(pts, zdf, zoom=7)
+    plan = df._jdf.queryExecution().executedPlan().toString()  # before AQE re-plans
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert plan.count("MapInPandas") == 1
+    assert "LocalTableScan" not in plan
+    got = {(r["doc_id"], r["zone_id"]) for r in df.collect()}
+    assert got == _raycast_pairs(pts, zones)
+    assert any(z == 50 for _, z in got)  # the concave zone has hits
 
 
 def test_pip_join_df_batch_cover_matches_per_part(spark):
@@ -220,9 +229,7 @@ def test_pip_join_df_batch_cover_matches_per_part(spark):
 
 def test_pip_join_df_plan_no_driver_cover(spark):
     """The polygon side must stay distributed end-to-end: the cover runs as
-    a MapInPandas over the ring table (its OWN plan — since r7 the join
-    consumes the cover through one executor-side localCheckpoint instead of
-    re-running the cover per union branch), and the joined plan holds no
+    a MapInPandas over the ring table, and the joined plan holds no
     LocalTableScan (a driver-materialized cover would show up as one)."""
     from pyspark.sql import functions as SF
 
@@ -251,13 +258,15 @@ def test_pip_join_df_plan_no_driver_cover(spark):
 
 
 def test_pip_join_df_tolerates_empty_rings(spark):
-    """A degenerate (xs=[], ys=[]) ring row must not crash the distributed
-    cover (parity with the driver-side path's empty-part skip)."""
+    """Degenerate ring rows — empty, a single vertex, a two-vertex segment
+    — must not crash the distributed cover nor keep any point (the
+    ray-cast keeps none: fewer than 3 edges enclose nothing)."""
     pts = synth.doc_points(spark, 500)
     zones = synth.zone_polygons(3, "hex")
     zdf = _zones_as_df(spark, zones)
     empty = spark.createDataFrame(
-        [(99, [], [])], "zone_id long, xs array<double>, ys array<double>"
+        [(99, [], []), (98, [0.0], [0.0]), (97, [-1.0, 1.0], [-1.0, 1.0])],
+        "zone_id long, xs array<double>, ys array<double>",
     )
     a = pip.pip_join_df(pts, zdf, zoom=7)
     b = pip.pip_join_df(pts, zdf.unionByName(empty), zoom=7)
@@ -305,16 +314,13 @@ def test_convex_flag_on_padded_rings_regression(spark):
     lens = np.array([6, 6, 7], dtype=np.int64)
     got = pip._convex_ccw_batch(X, Y, lens)
     assert list(got) == [True, False, True]  # convex open, concave, convex CLOSED
-    # end-to-end: auto ≡ udf on a zone set containing that concave ring
+    # end-to-end: the numpy ray-cast rows on a zone set holding that ring
     pts = synth.doc_points(spark, 2500)
     poly = np.stack([cx * 30.0, cy * 30.0], axis=1)
     zones = synth.zone_polygons(3, "hex") + [{"zone_id": 77, "parts": [poly]}]
     zdf = _zones_as_df(spark, zones)
-    a = {(r["doc_id"], r["zone_id"])
-         for r in pip.pip_join_df(pts, zdf, zoom=7, refine="auto").collect()}
-    b = {(r["doc_id"], r["zone_id"])
-         for r in pip.pip_join_df(pts, zdf, zoom=7, refine="udf").collect()}
-    assert a == b and any(z == 77 for _, z in a)
+    a = {(r["doc_id"], r["zone_id"]) for r in pip.pip_join_df(pts, zdf, zoom=7).collect()}
+    assert a == _raycast_pairs(pts, zones) and any(z == 77 for _, z in a)
 
 
 def test_pip_join_df_hot_spot_skew_still_exact(spark):
@@ -333,22 +339,19 @@ def test_pip_join_df_hot_spot_skew_still_exact(spark):
 
 
 def test_pip_join_df_open_17_vertex_ring_keeps_edge_cap(spark):
-    """An OPEN ring of 17 vertices has 17 edges: one past the flat
-    coefficient cap, so it must take the array refine (no ``e16_*``
-    columns) and still keep exactly the ray-cast rows."""
+    """An OPEN ring of 17 vertices has 17 edges: past the unrolled edge
+    cap, so its boundary runs ray-cast through ``aggregate()`` and still
+    keep exactly the numpy ray-cast rows."""
     ang = np.linspace(0, 2 * np.pi, 18)[:-1]
     ring = np.stack([10.0 * np.cos(ang), 10.0 * np.sin(ang)], axis=1)
     zones = synth.zone_polygons(3, "hex") + [{"zone_id": 17, "parts": [ring]}]
     zdf = _zones_as_df(spark, zones)
+    runs = pip._part_runs_df(zdf, 7).where("zone_id = 17 AND _m > 0").select("_m").collect()
+    assert runs and {r["_m"] for r in runs} == {17} and 17 > pip._UNROLL_EDGES
     pts = synth.doc_points(spark, 3000)
-    auto = pip.pip_join_df(pts, zdf, zoom=7)
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert f"e{pip._MAX_EDGE_COLS}_xa" not in plan
-    a = {(r["doc_id"], r["zone_id"]) for r in auto.select("doc_id", "zone_id").collect()}
-    b = {(r["doc_id"], r["zone_id"])
-         for r in pip.pip_join_df(pts, zdf, zoom=7, refine="udf")
-         .select("doc_id", "zone_id").collect()}
-    assert a == b and any(z == 17 for _, z in a)
+    a = {(r["doc_id"], r["zone_id"])
+         for r in pip.pip_join_df(pts, zdf, zoom=7).select("doc_id", "zone_id").collect()}
+    assert a == _raycast_pairs(pts, zones) and any(z == 17 for _, z in a)
 
 
 # --- run-length cover --------------------------------------------------------
@@ -419,7 +422,8 @@ def test_zone_runs_expand_to_zone_cover(case):
 def test_pip_join_at_run_ends_and_block_edges(spark, case):
     """Points at the first and last cell of every run, and just either
     side of each run's outer cell edges (so on both sides of every block
-    boundary a run was split at), match the ray-cast oracle."""
+    boundary a run was split at), match the ray-cast oracle through both
+    joins."""
     zones, _ = _run_cases()[case]
     zoom = 7
     b = min(5, zoom)
@@ -448,6 +452,9 @@ def test_pip_join_at_run_ends_and_block_edges(spark, case):
         got = {(r["key"], r["zone_id"])
                for r in pip.pip_join(pts, zones, zoom=zoom, refine=refine).select("key", "zone_id").collect()}
         assert got == exp and len(exp) > 0, refine
+    got = {(r["key"], r["zone_id"]) for r in pip.pip_join_df(
+        pts, _zones_as_df(spark, zones), zoom=zoom).select("key", "zone_id").collect()}
+    assert got == exp
 
 
 def _jobs_run_while(spark, group, build):
@@ -479,12 +486,15 @@ def test_building_pip_join_and_zonal_runs_no_job(spark):
     from pyramids_spark.operators import zonal
 
     pts = synth.doc_points(spark, 1000).withColumn("v", F.col("key").cast("double"))
+    zdf = _zones_as_df(spark, synth.zone_polygons(6, "hex"))
 
     def build():
         pip.pip_join(pts, synth.zone_polygons(10, "hex"), zoom=11)
         pip.pip_join(pts, synth.zone_polygons(4, "multi"), zoom=7)
         pip.pip_join(pts, [{"zone_id": 0, "parts": [_star(0.0, 0.0, 10.0)]}], zoom=7)
         zonal.zonal_stats_points(pts, synth.zone_polygons(5, "box"), "v", zoom=8)
+        pip.pip_join_df(pts, zdf, zoom=10)
+        zonal.zonal_stats_points_df(pts, zdf, "v", zoom=10)
 
     assert _jobs_run_while(spark, "pip-build", build) == []
 

@@ -41,6 +41,25 @@ def test_salted_agg_equals_plain_agg_under_extreme_skew(spark):
         np.testing.assert_allclose(got[c], exp[c], rtol=1e-9)
 
 
+def test_salted_agg_variance_far_from_zero(spark):
+    """Values ``2**40 + (i % 7)`` have var_pop about 4; E[x²] − E[x]²
+    cancels every digit of it in double arithmetic (var came out negative
+    and std NaN), so the per-salt moments must merge as (count, mean, M2).
+    A mean near 2**40 holds only 2**-12 of absolute precision, so var ≈ 4
+    is good to about 1e-4 relative, not to the last digit."""
+    n = 7000
+    df = spark.range(n).select(
+        (F.col("id") % 3).alias("k"),
+        (F.lit(float(2**40)) + (F.col("id") % 7).cast("double")).alias("v"),
+    )
+    got = salted_agg(df, "k", "v", n_salt=16).toPandas().sort_values("k")
+    v = 2.0**40 + (np.arange(n) % 7)
+    for k, row in zip(range(3), got.itertuples()):
+        want = np.var(v[np.arange(n) % 3 == k] - 2.0**40)
+        assert row.k == k and row.count == len(v[k::3])
+        np.testing.assert_allclose([row.var, row.std], [want, np.sqrt(want)], rtol=1e-4)
+
+
 def test_salt_col_spreads_hot_key(spark):
     """All rows share one key; the per-row salt must spread them across all
     salt buckets with no bucket dominating (the partial-agg stage then has
